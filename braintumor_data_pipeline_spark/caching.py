@@ -5,11 +5,11 @@ branches (the diamond rule: uncached, Catalyst rebuilds the subplan per
 branch). A builder cannot know when its RETURNED lazy frame has been
 fully consumed, so cache lifecycle belongs to whoever drives a batch of
 queries: long-lived sessions (the oracle gate, bench, plan audit) call
-:func:`release_tracked` between queries; one-query sessions can ignore
-it (ContextCleaner reclaims on reference drop). Before r13 only
-indexing's blocked_* helpers were tracked; the diamond persists added
-in r12 (text, sketch, experiments, graph, similarity, ...) relied on GC
-and accumulated across a 401-query gate session (ADVICE r12).
+:func:`release_tracked` between queries. Nothing else frees these
+blocks: Spark's CacheManager holds a persisted plan until ``unpersist``
+(ContextCleaner only reclaims what becomes unreachable, and the
+CacheManager's own reference keeps a cached plan reachable), so an
+untracked persist lives as long as the session.
 
 Usage inside a query builder — a drop-in for ``.persist()`` in a method
 chain::

@@ -894,8 +894,13 @@ def dummy_gt_dice(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply, schema="image_id int, gt_area long, dice_vs_dummy double"
+    return (
+        grid_images_df(spark, sf_dir)
+        .groupBy("image_id")
+        .applyInPandas(
+            apply, schema="image_id int, gt_area long, dice_vs_dummy double"
+        )
+        .orderBy("image_id")
     )
 
 

@@ -528,7 +528,7 @@ def multimodal_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     are the 100 TB-relevant properties."""
     return video_frame_features_df(
         documents_as_mjpeg_table(spark, sf_dir), every_nth=4
-    )
+    ).orderBy("key", "frame_idx")
 
 
 # --- spectral bands: integer fixed-point DFT (recomputing oracle) ----

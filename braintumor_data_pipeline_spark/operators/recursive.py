@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..caching import persist_tracked
 from ..registry import register
 from ..sources.fixtures import load_table as _t
 
@@ -141,7 +142,7 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the recursion re-evaluates the anchor CTE (events scan + daily
     # rollup) each step; caching the 6-column source turns 30 parquet
     # scans into memory reads (~4x wall on sf0.01)
-    ev = load_table(spark, sf_dir, "events").cache()
+    ev = load_table(spark, sf_dir, "events").transform(persist_tracked)
     ev.createOrReplaceTempView("events")
     return spark.sql(_HOLT_SQL)
 

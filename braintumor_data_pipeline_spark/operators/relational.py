@@ -853,6 +853,7 @@ def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(F.approx_count_distinct("l_partkey").alias("n_part_approx"))
+        .orderBy("l_returnflag")
     )
 
 

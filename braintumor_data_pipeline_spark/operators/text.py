@@ -727,7 +727,7 @@ def compression_ratio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         comp,
         schema="doc_id long, n_raw_bytes long, n_zlib_bytes long,"
         " ratio_micro long, flag_repetitive boolean, flag_noise boolean",
-    )
+    ).orderBy("doc_id")
 
 
 @register(

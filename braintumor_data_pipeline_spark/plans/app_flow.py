@@ -107,6 +107,9 @@ def app_analysis_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         " area double, perimeter_px double, circularity double,"
         " eccentricity double, solidity double, dice_vs_dummy double"
     )
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply, schema=schema
+    return (
+        grid_images_df(spark, sf_dir)
+        .groupBy("image_id")
+        .applyInPandas(apply, schema=schema)
+        .orderBy("image_id")
     )

@@ -43,8 +43,8 @@ def test_contract_shape():
 
 def test_driver_window_samples_every_family():
     """The driver hash-checks only the first DRIVER_WINDOW queries; that
-    prefix must be exactly PRIORITY: oracle-backed throughout, covering
-    every operator family within the rolling horizon, and containing
+    prefix must be exactly driver_window(): oracle-backed throughout,
+    covering every operator family within the rolling horizon, and containing
     every bench HEADLINE query so perf and correctness gates cover the
     same surface."""
     import bench
@@ -53,8 +53,8 @@ def test_driver_window_samples_every_family():
     names = list(specs)
     window = names[: registry.DRIVER_WINDOW]
 
-    assert len(registry.PRIORITY) == registry.DRIVER_WINDOW
-    assert window == list(registry.PRIORITY)
+    assert len(registry.driver_window()) == registry.DRIVER_WINDOW
+    assert window == list(registry.driver_window())
     # every windowed query carries a hashable oracle
     assert all(specs[n].oracle for n in window)
     # ROLLING-3 coverage (r11 policy, VERDICT r10 task 1): every
@@ -191,3 +191,91 @@ def test_rolling_coverage_horizon_anchored_to_ledger(tmp_path):
     (tmp_path / "WINDOW_LEDGER.json").write_text("not json")
     got = registry.recent_checked_names(root=str(tmp_path))
     assert got == {"green_r2", "green_inprogress"}
+
+
+def _synthetic_specs(families):
+    """QuerySpecs for ``{family: [name, ...]}`` in registration order; a
+    name ending in ``_pinned`` carries a pinned golden, one ending in
+    ``_rows`` no oracle."""
+    specs = {}
+    for fam, names in families.items():
+        for n in names:
+            def fn(spark, sf_dir):
+                return None
+
+            fn.__module__ = f"pkg.operators.{fam}"
+            oracle = None if n.endswith("_rows") else "SELECT 1"
+            pinned = "0.01" if n.endswith("_pinned") else None
+            specs[n] = registry.QuerySpec(n, fn, oracle, pinned_sf=pinned)
+    return specs
+
+
+def test_window_keeps_stalest_member_of_uncovered_families(tmp_path, monkeypatch):
+    """Families outside the horizon get one keep, never-checked first,
+    else the oldest confirmation; the fill follows the same order.
+    Pinned and rows-only queries never enter, and an artifact the
+    ledger does not list (r05) does not move the horizon."""
+    import json
+
+    green = {"rows_match": True, "schema_match": True, "hash_match": True}
+    (tmp_path / "CORRECTNESS_r03.json").write_text(json.dumps({"a1": green}))
+    (tmp_path / "CORRECTNESS_r04.json").write_text(json.dumps({"c1": green}))
+    (tmp_path / "CORRECTNESS_r05.json").write_text("{}")  # not in the ledger
+    confirmed = {"a1": [2, 3], "a2": [1], "a3": [1], "b1": [1], "c1": [4]}
+    (tmp_path / "WINDOW_LEDGER.json").write_text(
+        json.dumps(
+            {
+                "rounds": [1, 2, 3, 4],
+                "queries": {
+                    n: {"confirmed_rounds": r, "checked_rounds": r}
+                    for n, r in confirmed.items()
+                },
+            }
+        )
+    )
+    specs = _synthetic_specs(
+        {
+            "h": ["h1"],
+            "a": ["a1", "a2", "a3"],
+            "b": ["b1", "b2"],
+            "c": ["c1", "c2"],
+            "d": ["d1_pinned", "d2_rows"],
+        }
+    )
+    monkeypatch.setattr(registry, "DRIVER_WINDOW", 5)
+    # horizon = ledger rounds on disk, newest 2 = r03, r04: a and c covered
+    assert registry.compute_window(specs, str(tmp_path), ("h1",)) == [
+        "h1", "b2", "c2", "a2", "a3",
+    ]
+    # without r03 in the horizon, family a needs its stalest member: a2
+    # (confirmed r1) over a1 (r3), and over a3 (also r1) by registration
+    (tmp_path / "CORRECTNESS_r03.json").unlink()
+    assert registry.compute_window(specs, str(tmp_path), ("h1",)) == [
+        "h1", "b2", "a2", "c2", "a3",
+    ]
+
+
+def test_window_overflow_and_unknown_names_raise(tmp_path, monkeypatch):
+    specs = _synthetic_specs({"h": ["h1"], "a": ["a1"], "b": ["b1"]})
+    monkeypatch.setattr(registry, "DRIVER_WINDOW", 2)
+    with pytest.raises(RuntimeError, match="3 slots"):
+        registry.compute_window(specs, str(tmp_path), ("h1",))
+    with pytest.raises(RuntimeError, match="nope"):
+        registry.compute_window(specs, str(tmp_path), ("nope",))
+
+
+def test_window_without_ledger_is_full_and_covers_every_family(tmp_path):
+    """An installed copy without the driver artifacts still builds a
+    full window: fixed names plus one member of every recomputing
+    family."""
+    specs = registry.all_queries()
+    window = registry.compute_window(specs, str(tmp_path))
+    recompute = [n for n, s in specs.items() if s.oracle and not s.pinned_sf]
+    assert len(window) == len(set(window)) == registry.DRIVER_WINDOW
+    assert window[: len(registry.HEADLINE + registry.RECHECK)] == list(
+        registry.HEADLINE + registry.RECHECK
+    )
+    assert set(window) <= set(recompute)
+    assert {registry.family(specs[n]) for n in window} == {
+        registry.family(specs[n]) for n in recompute
+    }

@@ -93,3 +93,20 @@ def test_holt_forecast_matches_float_replay(spark, sf_dir):
     assert abs(row.level_final - lvl) < 1e-3
     assert abs(row.trend_final - tr) < 1e-3
     assert abs(row.forecast_7d - (lvl + 7 * tr)) < 1e-2
+
+
+def test_holt_forecast_cache_is_released(spark, sf_dir):
+    """The events cache the recursion reads is tracked, so the batch
+    release leaves Spark's CacheManager empty."""
+    from braintumor_data_pipeline_spark.caching import release_tracked
+    from braintumor_data_pipeline_spark.operators.recursive import (
+        holt_linear_forecast,
+    )
+
+    release_tracked()
+    spark.catalog.clearCache()
+    holt_linear_forecast(spark, sf_dir).collect()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    assert not cache_manager.isEmpty()
+    release_tracked()
+    assert cache_manager.isEmpty()

@@ -8,8 +8,9 @@ Runs, in order, and fails fast on the first red:
   1. doc-count drift      tools/gen_catalog.py --check
   2. window ledger        tools/gen_window_ledger.py --check
   3. window invariants    the single test_queries_smoke window test
-                          (PRIORITY parity, headliners in-window,
-                          rolling-3 family coverage — seconds)
+                          (computed window == checked prefix,
+                          headliners in-window, rolling-3 family
+                          coverage — seconds)
   4. window determinism   tools/determinism_sweep.py sf0.001 (the
                           3-session certificate — 5-part / 32-part /
                           AQE-off — over the exact window the driver
@@ -35,10 +36,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STEPS = [
     ("doc-count drift", [sys.executable, "tools/gen_catalog.py", "--check"]),
     ("window ledger", [sys.executable, "tools/gen_window_ledger.py", "--check"]),
-    # window-policy invariants (r11): PRIORITY == checked prefix, all
-    # oracle-backed, headliners in-window, rolling-3 family coverage —
-    # seconds to run, and a bad rotation must fail THIS gate, not pytest
-    # hours later
+    # window-policy invariants: registry.driver_window() == checked
+    # prefix, all oracle-backed, headliners in-window, rolling-3 family
+    # coverage — seconds to run, and a stale ledger or an overfull
+    # RECHECK must fail THIS gate, not pytest hours later
     (
         "window invariants",
         [
@@ -53,7 +54,7 @@ STEPS = [
         ],
     ),
     # window-scope 3-session determinism certificate (VERDICT r11
-    # task 7): the exact PRIORITY surface the driver will hash, under
+    # task 7): the exact window the driver will hash, under
     # 5/32 shuffle partitions and an AQE-off pass, in separate
     # processes — partition-count- or scheduling-dependent results
     # fail HERE, not at the driver (~3 min at sf0.001)

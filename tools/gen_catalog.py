@@ -66,7 +66,7 @@ def main() -> None:
     qs = registry.all_queries()
     by_module: dict[str, list] = defaultdict(list)
     for name, entry in sorted(qs.items()):
-        by_module[entry.fn.__module__.rsplit(".", 1)[-1]].append((name, entry))
+        by_module[registry.family(entry)].append((name, entry))
 
     n_oracle = sum(1 for e in qs.values() if e.oracle and not e.pinned_sf)
     n_pinned = sum(1 for e in qs.values() if e.pinned_sf)

@@ -2,10 +2,9 @@
 ledger (VERDICT r4 item 8).
 
 Source of truth is the driver's own per-round artifacts
-``CORRECTNESS_r*.json`` (never the registry's prose rotation log): for
-every query that ever held a driver window slot, record the rounds it
-was checked and whether the check was fully green (rows + schema +
-hash, no err). Emits:
+``CORRECTNESS_r*.json``: for every query that ever held a driver window
+slot, record the rounds it was checked and whether the check was fully
+green (rows + schema + hash, no err). Emits:
 
     {"rounds": [1, 2, ...],
      "queries": {name: {"confirmed_rounds": [...],   # fully green
