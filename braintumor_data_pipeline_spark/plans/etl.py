@@ -1,13 +1,20 @@
 """The batch image-ETL pipeline (SURVEY §3.1) — Spark port of the
-reference's Beam dataflow (`/root/reference/dataflow_pipeline.py`):
+reference's Beam dataflow (`dataflow_pipeline.py`):
 
     MatchFiles → ReadMatches → ParDo(decode→window→CLAHE→blur→PNG→stats)
         → BigQuery append  (+ PNG side-writes inside the ParDo)
 
 becomes
 
-    binaryFile scan (glob) → ONE fused mapInPandas stage → stats parquet
-        append  (+ PNG sink from the same frame)
+    binaryFile scan (glob) → ONE fused mapInPandas stage (+ PNG
+        side-writes inside it) → stats parquet append
+
+`run_etl` is exactly one Spark job per call: the PNG bytes are written
+by the Python worker that encoded them and never return to the JVM,
+nothing is cached, and the row counts come from Observations on that
+same job instead of a second action. `process_dicom_files` is the lazy,
+side-effect-free frame (with the `png` column) for callers that choose
+their own sinks.
 
 Design (SURVEY §4.2): the whole per-image transform chain is fused into
 a single Arrow stage — N chained pandas UDFs would pay N JVM↔Python
@@ -20,6 +27,7 @@ math, batched by Arrow.
 
 from __future__ import annotations
 
+import logging
 import os
 from collections.abc import Iterator
 from datetime import datetime, timezone
@@ -27,7 +35,7 @@ from hashlib import sha256
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -38,6 +46,8 @@ from ..functions.imaging import (
 )
 from ..sources.dicom import dcmread
 from ..sources.png import encode_png
+
+_log = logging.getLogger(__name__)
 
 # bq_schema.json:1-19 mapped per SURVEY §1.2, plus the png payload column.
 STATS_SCHEMA = T.StructType(
@@ -60,6 +70,8 @@ STATS_SCHEMA = T.StructType(
         T.StructField("png", T.BinaryType(), True),
     ]
 )
+# what run_etl appends: the PNG bytes stay in the Python worker
+_STATS_ONLY = T.StructType(STATS_SCHEMA.fields[:-1])
 
 
 def _process_partition(
@@ -118,30 +130,38 @@ def _process_partition(
         yield pd.DataFrame(rows, columns=[f.name for f in STATS_SCHEMA.fields])
 
 
-def process_dicom_files(
-    spark: SparkSession, input_glob: str, processed_prefix: str = "processed"
-) -> DataFrame:
-    """Scan (S1/S2) + decode/transform/stats (S3, X1, X4, X5, X7, A1/A2,
-    P1-P7) as a lazy DataFrame; callers choose the sinks."""
-    scan = (
+def _scan(spark: SparkSession, input_glob: str) -> DataFrame:
+    return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.dcm")
         .load(input_glob)
         .select("path", "content")
     )
-    return scan.mapInPandas(
+
+
+def process_dicom_files(
+    spark: SparkSession, input_glob: str, processed_prefix: str = "processed"
+) -> DataFrame:
+    """Scan (S1/S2) + decode/transform/stats (S3, X1, X4, X5, X7, A1/A2,
+    P1-P7) as a lazy DataFrame; callers choose the sinks."""
+    return _scan(spark, input_glob).mapInPandas(
         lambda it: _process_partition(it, processed_prefix), STATS_SCHEMA
     )
 
 
-def _write_pngs(rows, out_dir: str) -> None:
+def _write_pngs(
+    batches: Iterator[pd.DataFrame], out_dir: str
+) -> Iterator[pd.DataFrame]:
+    """PNG side-sink (S9) inside the Arrow stage, as the reference writes
+    inside its ParDo: each batch's PNGs go to ``out_dir`` before its
+    stats rows are yielded, so the bytes never return to the JVM."""
     os.makedirs(out_dir, exist_ok=True)
-    for row in rows:
-        if row.png is None:
-            continue
-        name = os.path.splitext(row.file_name)[0] + ".png"
-        with open(os.path.join(out_dir, name), "wb") as fh:
-            fh.write(bytes(row.png))
+    for pdf in batches:
+        for file_name, png in zip(pdf["file_name"], pdf["png"]):
+            stem = os.path.splitext(file_name)[0]
+            with open(os.path.join(out_dir, stem + ".png"), "wb") as fh:
+                fh.write(png)
+        yield pdf.drop(columns="png")
 
 
 def run_etl(
@@ -150,17 +170,32 @@ def run_etl(
     processed_dir: str,
     stats_path: str,
 ) -> int:
-    """Execute the full pipeline: PNG side-sink (S9) + stats append sink
-    (S10, `WRITE_APPEND`/`CREATE_IF_NEEDED` ≈ parquet mode=append).
+    """Execute the full pipeline as ONE Spark job: scan → fused Arrow
+    stage that writes each batch's PNGs (S9) as the reference's ParDo
+    does → stats append sink (S10, `WRITE_APPEND`/`CREATE_IF_NEEDED` ≈
+    parquet mode=append). PNGs land before the stats commit; a retried
+    task rewrites the same file names.
+
     Returns the number of stats rows THIS run wrote (the parquet table
-    itself is append-mode and accumulates across runs)."""
-    df = process_dicom_files(spark, input_glob, processed_dir).cache()
-    try:
-        df.select("file_name", "png").foreachPartition(
-            lambda rows: _write_pngs(rows, processed_dir)
+    itself accumulates across runs), counted by an Observation on the
+    same job. A second one counts the scanned `*.dcm` files, and one
+    log record per call reports `accepted` and `rejected` (scanned −
+    accepted: unreadable or unencodable DICOMs)."""
+    scanned, accepted = Observation(), Observation()
+    scan = _scan(spark, input_glob).observe(scanned, F.count(F.lit(1)).alias("n"))
+    stats = (
+        scan.mapInPandas(
+            lambda it: _write_pngs(
+                _process_partition(it, processed_dir), processed_dir
+            ),
+            _STATS_ONLY,
         )
-        stats = df.drop("png")
-        stats.write.mode("append").parquet(stats_path)
-        return stats.count()  # served from the cache — this run only
-    finally:
-        df.unpersist()
+        .observe(accepted, F.count(F.lit(1)).alias("n"))
+    )
+    stats.write.mode("append").parquet(stats_path)
+    n_scanned, n_accepted = scanned.get["n"], accepted.get["n"]
+    _log.info(
+        "run_etl %s: accepted=%d rejected=%d",
+        input_glob, n_accepted, n_scanned - n_accepted,
+    )
+    return n_accepted

@@ -335,34 +335,36 @@ def run_tws_type_totals_local(
     )
     state_rows: list = []  # ≤ |event_type| tuples — bounded carry
     final: dict = {}
-    for b in range(n_batches):
-        batch = ev.filter(F.col("_batch") == b).withColumn(
-            "_batch_row", F.lit(True)
-        )
-        if state_rows:
-            seed = spark.createDataFrame(
-                [(t, str(n), str(s)) for t, n, s in state_rows],
-                "event_type string, _seed_n string, _seed_s string",
+    try:
+        for b in range(n_batches):
+            batch = ev.filter(F.col("_batch") == b).withColumn(
+                "_batch_row", F.lit(True)
             )
-            batch = batch.join(F.broadcast(seed), "event_type", "left")
-        else:
-            batch = batch.withColumn(
-                "_seed_n", F.lit(None).cast("string")
-            ).withColumn("_seed_s", F.lit(None).cast("string"))
-        emitted = (
-            batch.groupBy("event_type")
-            .applyInPandas(drive, schema=schema)
-            .collect()  # ≤ |event_type| rows per batch — state, not data
-        )
-        for r in emitted:
-            final[r.event_type] = (r.event_type, r.n_events, r.sum_value)
-        # carry: merge this batch's state over the previous carry (keys
-        # absent from this batch keep their old state)
-        carried = {t[0]: t for t in state_rows}
-        for r in emitted:
-            carried[r.event_type] = (r.event_type, r._n, r._s_micros)
-        state_rows = list(carried.values())
-    ev.unpersist()
+            if state_rows:
+                seed = spark.createDataFrame(
+                    [(t, str(n), str(s)) for t, n, s in state_rows],
+                    "event_type string, _seed_n string, _seed_s string",
+                )
+                batch = batch.join(F.broadcast(seed), "event_type", "left")
+            else:
+                batch = batch.withColumn(
+                    "_seed_n", F.lit(None).cast("string")
+                ).withColumn("_seed_s", F.lit(None).cast("string"))
+            emitted = (
+                batch.groupBy("event_type")
+                .applyInPandas(drive, schema=schema)
+                .collect()  # ≤ |event_type| rows per batch — state, not data
+            )
+            for r in emitted:
+                final[r.event_type] = (r.event_type, r.n_events, r.sum_value)
+            # carry: merge this batch's state over the previous carry (keys
+            # absent from this batch keep their old state)
+            carried = {t[0]: t for t in state_rows}
+            for r in emitted:
+                carried[r.event_type] = (r.event_type, r._n, r._s_micros)
+            state_rows = list(carried.values())
+    finally:
+        ev.unpersist()
     return spark.createDataFrame(
         sorted(final.values()),
         "event_type string, n_events long, sum_value double",

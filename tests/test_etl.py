@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 import numpy as np
@@ -84,6 +85,17 @@ def test_run_etl_sinks(spark, dicom_dir, tmp_path):
     assert len(pngs) == 12 and pngs[0] == "img_000.png"
     img = decode_png((tmp_path / "processed" / "img_000.png").read_bytes())
     assert img.shape == (64, 64) and img.dtype == np.uint8
+    # the sinks hold exactly the lazy frame's PNG bytes and stats columns
+    frame = process_dicom_files(spark, dicom_dir, processed).collect()
+    for r in frame:
+        written = tmp_path / "processed" / (os.path.splitext(r.file_name)[0] + ".png")
+        assert written.read_bytes() == r.png
+    keep = [f.name for f in STATS_SCHEMA.fields if f.name not in ("png", "processed_at")]
+    stats_df = spark.read.parquet(stats)
+    assert stats_df.columns == [f.name for f in STATS_SCHEMA.fields][:-1]
+    assert sorted(stats_df.select(keep).collect()) == sorted(
+        tuple(r[k] for k in keep) for r in frame
+    )
     # append semantics (S10 WRITE_APPEND): each run writes its own 12
     # rows and reports only them; the table accumulates
     n2 = run_etl(spark, dicom_dir, processed, stats)
@@ -98,3 +110,69 @@ def test_run_etl_sinks(spark, dicom_dir, tmp_path):
         .limit(50)
     )
     assert agg.count() == 3
+
+
+def _write_batch(d, rng, n_valid):
+    """``n_valid`` readable DICOMs plus one cut inside its pixel data and
+    one of random bytes; returns the valid stems."""
+    valid = set()
+    for i in range(n_valid):
+        px = rng.randint(0, 3000, size=(32, 32)).astype(np.int16)
+        (d / f"ok_{i}.dcm").write_bytes(dcmwrite(px, patient_id=f"P{i}"))
+        valid.add(f"ok_{i}")
+    good = dcmwrite(rng.randint(0, 3000, size=(64, 64)).astype(np.int16))
+    (d / "truncated.dcm").write_bytes(good[: len(good) - 100])
+    (d / "garbage.dcm").write_bytes(rng.bytes(4096))
+    return valid
+
+
+def _holds_cache(spark) -> bool:
+    jss = spark._jsparkSession
+    return not (
+        jss.sharedState().cacheManager().isEmpty()
+        and spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    )
+
+
+def test_run_etl_one_job_rejects_corrupt(spark, tmp_path, caplog):
+    """Corrupt DICOMs are dropped and counted; the whole batch is ONE
+    Spark job (PNGs written inside the Arrow stage, count from an
+    Observation) and leaves nothing cached."""
+    src = tmp_path / "in"
+    src.mkdir()
+    valid = _write_batch(src, np.random.RandomState(7), 6)
+    processed, stats = str(tmp_path / "png"), str(tmp_path / "stats")
+    sc = spark.sparkContext
+    # caches other tests in this session left behind are not run_etl's
+    spark.catalog.clearCache()
+    for rdd in list(sc._jsc.getPersistentRDDs().values()):
+        rdd.unpersist()
+    group = f"etl-one-job-{os.getpid()}"
+    sc.setJobGroup(group, "run_etl job count")
+    caplog.set_level(logging.INFO, logger="braintumor_data_pipeline_spark.plans.etl")
+    try:
+        n = run_etl(spark, str(src), processed, stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n == len(valid)
+    assert {os.path.splitext(f)[0] for f in os.listdir(processed)} == valid
+    assert spark.read.parquet(stats).count() == len(valid)
+    assert not _holds_cache(spark)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    rec = [r.getMessage() for r in caplog.records if "run_etl" in r.getMessage()]
+    assert len(rec) == 1 and f"accepted={len(valid)} rejected=2" in rec[0]
+
+
+def test_run_etl_no_dicoms(spark, tmp_path):
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "readme.txt").write_text("no DICOMs here")
+    assert run_etl(spark, str(src), str(tmp_path / "png"), str(tmp_path / "stats")) == 0
+
+
+def test_process_dicom_files_has_no_side_writes(spark, dicom_dir, tmp_path, monkeypatch):
+    """The lazy frame only computes: PNG side-writes live in run_etl."""
+    monkeypatch.chdir(tmp_path)
+    process_dicom_files(spark, dicom_dir).write.format("noop").mode("overwrite").save()
+    assert os.listdir(tmp_path) == []

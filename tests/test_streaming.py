@@ -406,3 +406,22 @@ def test_streaming_bloom_equals_batch(spark, sf_dir, tmp_path):
     # stream emits only words with bits; batch spine includes zeros
     assert stream == {w: m for w, m in batch.items() if m != 0}
     assert len(batch) == BF_WORDS
+
+
+def test_tws_local_replay_releases_persist_on_error(spark, sf_dir, monkeypatch):
+    """A batch that fails mid-replay must not leak the replay's persist."""
+    import pytest
+
+    from braintumor_data_pipeline_spark.streaming.stateful import (
+        run_tws_type_totals_local,
+    )
+
+    def boom(*args, **kwargs):  # the carry seed of the second batch
+        raise RuntimeError("injected")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(spark, "createDataFrame", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_tws_type_totals_local(spark, sf_dir)
+    monkeypatch.undo()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
