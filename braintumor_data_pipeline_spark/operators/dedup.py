@@ -7,13 +7,15 @@ Four tiers, mirroring a production LLM-data dedup stack:
 3. **MinHash + LSH banding** — tokens → k seeded md5 min-hashes → band
    signatures → bucket self-join for candidate pairs. All hashing is
    ``md5`` over deterministic strings, so DuckDB can replay it exactly.
-4. **n-gram Jaccard** — 3-token shingles (shuffle-free array slicing;
-   the oracle uses lead() windows — two independent constructions),
-   inverted-index self-join on shingle, exact Jaccard per pair.
+4. **n-gram Jaccard** — 3-token shingles (narrow array slicing after
+   a doc_id fan-out; the oracle uses lead() windows — two independent
+   constructions), inverted-index self-join on shingle, exact Jaccard
+   per pair.
 
 Scale notes (100 TB of documents):
 - every stage shuffles on content-derived keys (hash / band signature /
-  shingle), never on doc_id — uniform distribution, no skew by design;
+  shingle) or on the unique doc_id (the shingle fan-out) — uniform
+  distribution, no skew by design;
 - LSH banding bounds the candidate-pair blowup: pairs are only generated
   within a bucket, and the band count (4 bands × 2 rows) trades recall
   vs cost exactly as in the MinHash literature;
@@ -32,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
+from ..functions.arrays import explode_rows
 from ..registry import register
 from ..sources.fixtures import load_table as _t
 
@@ -381,8 +384,9 @@ _SHINGLES_ORACLE = """
 def shingle_arrays_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh_arr, n_sh): each document's DISTINCT 3-token shingle
     set as a SORTED array of 60-bit md5-prefix hashes, plus its size —
-    built entirely NARROW (split → per-element hash → array_distinct →
-    array_sort), no shuffle anywhere.
+    built NARROW after one fan-out (split → per-element hash →
+    array_distinct → array_sort). Documents with fewer than 3 tokens
+    have no shingle and no row.
 
     This is the shared base of every shingle consumer. Doing distinct
     per-doc in the array (instead of a row-level ``.distinct()`` after
@@ -391,21 +395,35 @@ def shingle_arrays_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow columns removes the per-doc count aggregation (+ its join)
     and the PPJoin prefix row_number window outright.
 
+    Fan-out: ``documents`` is hash-repartitioned on doc_id into
+    ``defaultParallelism`` partitions before tokenizing. A corpus
+    stored as one row group is one scan task, and without the fan-out
+    the tokenize, the explode and every consumer's join probe and
+    partial aggregate run in that one task. The count is explicit
+    because AQE does not coalesce a shuffle with a requested partition
+    count. At scale the cost is one extra shuffle of (doc_id, text).
+
+    Two rules keep every lambda-built array evaluated once per row:
+    the token array is materialized in its own projection before the
+    ``transform`` references it (inlining ``split`` into the lambda
+    re-tokenizes per element access, measured 5× slower), and
+    consumers explode ``sh_arr`` through
+    :func:`~..functions.arrays.explode_rows`, never ``F.explode``, whose
+    inferred ``size(sh_arr) > 0`` filter would rebuild the array.
+
     The shingle is carried as a 60-bit hash, not the raw string: joins
     move and compare 8-byte longs instead of ~20-40-byte strings.
     Collisions are negligible (~n²/2⁶¹) and the oracle hashes
     identically, so comparisons stay exact."""
-    d = _t(spark, sf_dir, "documents")
-    # materialize the token array FIRST: referencing split() inside the
-    # transform lambda would inline a fresh split per element access
-    # (O(n²) tokenization per doc — measured 5× slower)
-    toks = d.select("doc_id", F.split("text", " ").alias("t"))
+    d = _t(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
+    toks = d.select("doc_id", F.split("text", " ").alias("t")).filter(
+        F.size("t") >= 3
+    )
     t = F.col("t")
-    starts = F.when(
-        F.size(t) >= 3, F.sequence(F.lit(1), F.size(t) - 2)
-    ).otherwise(F.array().cast("array<int>"))
     hashed = F.transform(
-        starts,
+        F.sequence(F.lit(1), F.size(t) - 2),
         lambda i: F.conv(
             F.substring(
                 F.md5(
@@ -431,12 +449,12 @@ def shingle_arrays_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct 3-token shingles per document as rows — explode of
-    :func:`shingle_arrays_df`, still fully NARROW (the old row-level
-    ``.distinct()`` exchange is gone; dedup happens per-doc in the
-    array), vs the window-lead formulation the DuckDB oracle uses
-    (same shingle set, two independent constructions)."""
-    return shingle_arrays_df(spark, sf_dir).select(
-        "doc_id", F.explode("sh_arr").alias("shingle")
+    :func:`shingle_arrays_df` with no further exchange (the old
+    row-level ``.distinct()`` exchange is gone; dedup happens per-doc
+    in the array), vs the window-lead formulation the DuckDB oracle
+    uses (same shingle set, two independent constructions)."""
+    return explode_rows(
+        shingle_arrays_df(spark, sf_dir), "sh_arr", "shingle", "doc_id"
     )
 
 
@@ -444,8 +462,8 @@ def shingles_with_count_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_sh, shingle) rows: :func:`shingles_df` with the
     per-doc distinct-set size carried as a narrow column, so join
     consumers never need a count aggregation + re-join."""
-    return shingle_arrays_df(spark, sf_dir).select(
-        "doc_id", "n_sh", F.explode("sh_arr").alias("shingle")
+    return explode_rows(
+        shingle_arrays_df(spark, sf_dir), "sh_arr", "shingle", "doc_id", "n_sh"
     )
 
 
@@ -482,8 +500,14 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 broadcasts → 1 exchange + 1 broadcast (r12, plan diff in
     plans/r12/). The shingle relation feeds both self-join sides;
     persisting it materializes the tokenize work once. MEMORY_AND_DISK
-    spills gracefully at scale, and Spark's ContextCleaner unpersists
-    when the query's reference is collected."""
+    spills gracefully at scale. The block lives until
+    ``caching.release_tracked()`` runs after the query (the
+    CacheManager holds a persisted plan until ``unpersist``).
+
+    The relation arrives in ``defaultParallelism`` doc_id partitions
+    (the fan-out in :func:`shingle_arrays_df`), so the broadcast-join
+    probe and the partial pair count run on every core; a one-row-group
+    corpus used to put them in a single task."""
     sh = shingles_with_count_df(spark, sf_dir).transform(persist_tracked)
     a = sh.select(
         F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "shingle"
@@ -1425,12 +1449,11 @@ def minhash_jaccard_estimation_error(
     # pair groupBy + count agg + two broadcast count-joins collapse
     # into two joins and a narrow intersect (same plan diff family as
     # prefix_filter_jaccard_pairs).
-    # n_sh > 0 keeps the algebra identical to the oracle's, which
-    # builds counts from EXPLODED shingles and so never has a row for
-    # a zero-shingle doc. Unreachable today (LSH candidates require
-    # signatures built from shingles) but guards the inner joins below
-    # against a future upstream change (ADVICE r12).
-    arr = shingle_arrays_df(spark, sf_dir).filter(F.col("n_sh") > 0)
+    # shingle_arrays_df has no row for a zero-shingle doc, which keeps
+    # the inner joins below identical to the oracle's algebra (its
+    # counts come from EXPLODED shingles). A `n_sh > 0` filter here
+    # would be inlined into a per-row rebuild of the shingle array.
+    arr = shingle_arrays_df(spark, sf_dir)
     ca = arr.select(
         F.col("doc_id").alias("doc_a"),
         F.col("sh_arr").alias("arr_a"),

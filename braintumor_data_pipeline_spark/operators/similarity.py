@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
+from ..functions.arrays import explode_rows
 from ..registry import register
 from . import _pinned_sql as _pinned
 from ..sources.fixtures import load_table as _t
@@ -569,7 +570,12 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str) -> list:
 
 
 def _nearest_cell(u: Column, cents: list) -> Column:
-    """argmax-dot cell id as a codegen expression (K structs, array_max)."""
+    """argmax-dot cell id as a codegen expression (K structs, array_max).
+
+    Never null (array_max over K ≥ 1 non-null structs); the coalesce
+    says so to Catalyst. A nullable cell used as a join key gets an
+    inferred ``isnotnull(cell)`` Filter pushed below the projection,
+    which evaluates all K dot products a second time per row."""
     scored = F.array(
         *[
             F.struct(
@@ -579,7 +585,7 @@ def _nearest_cell(u: Column, cents: list) -> Column:
             for i, c in enumerate(cents)
         ]
     )
-    return F.array_max(scored)["i"]
+    return F.coalesce(F.array_max(scored)["i"], F.lit(-1))
 
 
 def _probe_cells(u: Column, cents: list, nprobe: int) -> Column:
@@ -1338,7 +1344,7 @@ def label_centroid_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("qv"),
     )
     percell = (
-        q.select("label", F.posexplode("qv").alias("dim", "qval"))
+        explode_rows(q, "qv", "qval", "label", pos="dim")
         .groupBy("label", "dim")
         .agg(F.sum("qval").alias("s"), F.count("*").alias("c"))
     )
@@ -3110,7 +3116,7 @@ def _semdedup_capped(q: DataFrame) -> DataFrame:
     # Super-centroids: per-(group, dim) integer mean of member
     # centroids — G×64 rows, partial-aggregable, broadcast below.
     sup = (
-        cent.select("grp", F.posexplode("cv").alias("dim", "val"))
+        explode_rows(cent, "cv", "val", "grp", pos="dim")
         .groupBy("grp", "dim")
         .agg(F.floor(F.sum("val") / F.count("*")).alias("sc"))
         .groupBy("grp")
@@ -3181,7 +3187,10 @@ def _semdedup_report_from(capped: DataFrame, q: DataFrame) -> DataFrame:
         "aggregate(zip_with(qv, qv, (x, y) -> x * y), 0L,"
         " (acc, x) -> acc + x)"
     )
-    n2 = q.select("vec_id", dot_self.alias("n2"))
+    # coalesce: a non-nullable n2 keeps the gate's inferred isnotnull
+    # filter from re-running the fold below the projection (a null
+    # vector has a null dot, so it fails the gate either way)
+    n2 = q.select("vec_id", F.coalesce(dot_self, F.lit(0)).alias("n2"))
     a = capped.select(
         F.col("vec_id").alias("va"), "cluster", "subcluster"
     )

@@ -151,8 +151,11 @@ HEADLINE_EXCHANGE_BUDGET = {
     # r12: carried-counts restructure — per-doc n_sh rides the self-join
     # as a narrow column and distinct happens per-doc in the array, so
     # the counts aggregation + its two broadcast re-joins and the
-    # row-level distinct exchange are gone (7, 3) → (1, 1)
-    "ngram_jaccard_pairs": (1, 1),
+    # row-level distinct exchange are gone (7, 3) → (1, 1). Then
+    # (1, 1) → (3, 1): shingle_arrays_df fans documents out on doc_id
+    # (one hash exchange), and that exchange prints once more under
+    # the persisted relation's InMemoryRelation on each self-join side
+    "ngram_jaccard_pairs": (3, 1),
     "knn_bruteforce_cosine": (1, 0),
     "pixel_minmax_normalize": (1, 0),
     "mask_metrics": (1, 0),
@@ -184,6 +187,82 @@ def test_headline_exchange_budgets(spark, sf_dir):
         if got != (n_exch, n_bcast) or "SortMergeJoin" in plan:
             bad.append((name, got, "SMJ" if "SortMergeJoin" in plan else ""))
     assert not bad, bad
+
+
+#: Queries whose optimized plan had a Filter rebuilding a lambda-built
+#: array per row (explode's inferred size/isnotnull filter, or a join
+#: key's inferred isnotnull, inlined through the defining projection).
+ARRAY_REBUILD_QUERIES = (
+    "ngram_jaccard_pairs",
+    "shingle_containment_pairs",
+    "blocking_quality_report",
+    "minhash_jaccard_estimation_error",
+    "bm25_search_topk",
+    "ann_ivf_cosine",
+    "label_centroid_distances",
+    "semdedup_prune_report",
+)
+
+
+def test_no_filter_rebuilds_a_lambda_built_array(spark, sf_dir):
+    """None of these plans may hold a Filter whose condition contains a
+    lambdafunction: such a Filter is not code-generated and evaluates
+    the whole lambda-built array a second time for every row."""
+    from braintumor_data_pipeline_spark.caching import release_tracked
+    from tools.plan_audit import array_rebuild_filters
+
+    bad = {}
+    for name in ARRAY_REBUILD_QUERIES:
+        df = registry.all_queries()[name].fn(spark, sf_dir)
+        hits = array_rebuild_filters(df)
+        release_tracked()
+        if hits:
+            bad[name] = hits[0][:200]
+    assert not bad, bad
+
+
+def test_explode_rows_equals_explode(spark):
+    """explode_rows gives F.explode's (and, with pos, F.posexplode's)
+    rows and types on null elements, empty arrays and null arrays —
+    without the inferred Filter that rebuilds a lambda-built array."""
+    from pyspark.sql import functions as F
+
+    from braintumor_data_pipeline_spark.functions.arrays import explode_rows
+    from tools.plan_audit import array_rebuild_filters
+
+    i = F.col("id")
+    src = spark.range(5).select(
+        "id",
+        F.when(i == 0, F.array(i, F.lit(None), i + 1))
+        .when(i == 1, F.array().cast("array<bigint>"))
+        .when(i == 3, F.array(F.lit(None).cast("bigint")))
+        .when(i == 4, F.array(i))
+        .alias("a"),
+    )
+    # a materialized lambda-built array: what makes the trap fire
+    arr = src.select("id", F.transform("a", lambda x: x * 2).alias("t"))
+    cases = [
+        (
+            arr.select("id", F.explode("t").alias("v")),
+            explode_rows(arr, "t", "v", "id"),
+        ),
+        (
+            arr.select("id", F.posexplode("t").alias("k", "v")),
+            explode_rows(arr, "t", "v", "id", pos="k"),
+        ),
+    ]
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=str)
+
+    for want, got in cases:
+        assert got.dtypes == want.dtypes
+        assert rows(got) == rows(want)
+        assert array_rebuild_filters(want)  # the trap, reproduced
+        assert not array_rebuild_filters(got)
+    assert rows(cases[0][1]) == sorted(
+        [(0, 0), (0, None), (0, 2), (3, None), (4, 8)], key=str
+    )
 
 
 def test_unknown_table_raises_clean_error(spark, sf_dir):

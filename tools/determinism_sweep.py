@@ -9,12 +9,14 @@ twice — under deliberately different ``spark.sql.shuffle.partitions`` —
 in two separate processes (sessions can't change partition count reliably
 mid-flight for AQE'd plans) and compares canonicalized results.
 
-Usage: python tools/determinism_sweep.py [sf_dir] [--all]
+Usage: python tools/determinism_sweep.py [sf_dir] [--all] [name_filter...]
   --all sweeps EVERY recomputing-oracle query (the full catalog), two
   passes (5 vs 32 shuffle partitions, AQE on) — the catalog-wide
   stability certificate; default sweeps the driver window with a
-  third AQE-off pass.
-Internal: ... --worker <sf_dir> <n_partitions> <out.json> [aqe] [all].
+  third AQE-off pass. Name filters (substring match, as in
+  verify_local.py) narrow either scope to the matching queries.
+Internal: ... --worker <sf_dir> <n_partitions> <out.json> [aqe] [all]
+  [comma-separated filters].
 """
 
 from __future__ import annotations
@@ -42,7 +44,7 @@ def canon(rows, cols):
 
 def worker(
     sf_dir: str, n_part: int, out_path: str, aqe: str = "on",
-    scope: str = "window",
+    scope: str = "window", filters: str = "",
 ) -> None:
     from braintumor_data_pipeline_spark import registry
     from braintumor_data_pipeline_spark.session import get_spark
@@ -59,6 +61,9 @@ def worker(
         ]
     else:
         names = list(registry.driver_window())
+    subs = [f for f in filters.split(",") if f]
+    if subs:
+        names = [n for n in names if any(f in n for f in subs)]
     from braintumor_data_pipeline_spark.caching import release_tracked
 
     results = {}
@@ -75,6 +80,7 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--all"]
     scope = "all" if "--all" in sys.argv[1:] else "window"
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    filters = ",".join(args[1:])
     tmp = tempfile.mkdtemp(prefix="determinism_")
     if scope == "all":
         passes = [(5, "on"), (32, "on")]
@@ -87,7 +93,7 @@ def main() -> int:
         rc = subprocess.call(
             [
                 sys.executable, __file__, "--worker",
-                sf_dir, str(n_part), out, aqe, scope,
+                sf_dir, str(n_part), out, aqe, scope, filters,
             ]
         )
         if rc != 0:
@@ -114,6 +120,7 @@ if __name__ == "__main__":
             sys.argv[4],
             sys.argv[5] if len(sys.argv) > 5 else "on",
             sys.argv[6] if len(sys.argv) > 6 else "window",
+            sys.argv[7] if len(sys.argv) > 7 else "",
         )
     else:
         raise SystemExit(main())

@@ -23,9 +23,16 @@ Flags:
                   path; ArrowEvalPython / mapInPandas are fine)
   NO-PUSHDOWN     a parquet scan of lineitem/orders/events with a
                   Filter directly above it but empty PushedFilters
+  ARRAY-REBUILD   a Filter in the optimized plan whose condition holds a
+                  lambdafunction: an inferred predicate (explode's
+                  size(arr) > 0, a join key's isnotnull) that pushdown
+                  inlined into the defining expression of a lambda-built
+                  array, so every row builds the array again in a
+                  non-codegen Filter (see functions/arrays.explode_rows)
 
 Usage: python tools/plan_audit.py [sf_dir] [name_filter...]
-Exit code 1 if any CRITICAL finding (GLOBAL-WINDOW, PY-ROW-UDF) fires.
+Exit code 1 if any CRITICAL finding (GLOBAL-WINDOW, CARTESIAN,
+PY-ROW-UDF, ARRAY-REBUILD) fires.
 """
 
 from __future__ import annotations
@@ -318,6 +325,18 @@ def _all_nlj_are_scalar_broadcasts(plan: str) -> bool:
     return n_joins > 0 and n_benign > 0 and n_bad == 0
 
 
+def array_rebuild_filters(df) -> list[str]:
+    """The Filter nodes of ``df``'s optimized plan whose condition holds
+    a ``lambdafunction`` (the ARRAY-REBUILD flag), one line each."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    ops = (ln.strip(" :+-") for ln in plan.splitlines())
+    return [
+        op
+        for op in ops
+        if re.match(r"(\*\(\d+\) )?Filter ", op) and "lambdafunction" in op
+    ]
+
+
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:]
@@ -426,6 +445,15 @@ def main() -> int:
             findings.append((tag, not benign))
         if "BatchEvalPython" in plan:
             findings.append(("PY-ROW-UDF", True))
+        rebuilds = array_rebuild_filters(df)
+        if rebuilds:
+            findings.append(
+                (
+                    f"ARRAY-REBUILD ({len(rebuilds)} Filter(s) rebuild a "
+                    f"lambda-built array per row: {rebuilds[0][:120]})",
+                    True,
+                )
+            )
         if findings:
             for tag, is_critical in findings:
                 sev = "CRIT" if is_critical else "info"
